@@ -35,6 +35,7 @@ from __future__ import annotations
 import argparse
 import shlex
 from dataclasses import dataclass, field
+from numbers import Integral
 
 _ISOLATION_LEVELS = {"read_committed", "read_uncommitted"}
 
@@ -99,9 +100,59 @@ class ConsumeOptions:
             return StartPosition("tail", self.tail)
         return StartPosition("end")
 
+    def offset_window(self, leo, dense: bool = False) -> tuple:
+        """THE offset algebra of every consume front end: the inclusive
+        ``[lo, hi]`` offset window these options select from a log whose
+        log-end offset is ``leo()`` (reference ``calculate_offset``,
+        src/consume.rs:580-605)::
+
+          -B                lo = 0
+          -H n, --start n   lo = n
+          -T n              lo = max(LEO - n, 0)  (a tail longer than
+                                                   the log clamps to 0)
+          (default)         lo = LEO              (Offset::end)
+          --end n           hi = n                (None: unbounded)
+
+        ``leo`` is a zero-argument callable, asked only for ``-T`` and
+        the default end position; it may return an ``int`` or a Spark
+        ``Column`` (then ``lo``/``hi`` come back as Columns).  When the
+        caller's offsets are ``dense`` (every offset in the window is a
+        record), the ``--rows`` budget is the window bound
+        ``hi = lo + rows - 1``; otherwise the caller applies it."""
+        start = self.calculate_start()
+        if start.kind == "beginning":
+            lo = 0
+        elif start.kind in ("head", "start"):
+            lo = start.n
+        elif start.kind == "tail":
+            lo = _greatest(leo() - start.n, 0)
+        else:
+            lo = leo()
+        hi = self.end
+        if dense and self.rows is not None:
+            budget_hi = lo + self.rows - 1
+            hi = budget_hi if hi is None else _least(hi, budget_hi)
+        return lo, hi
+
     @property
     def has_smartmodule(self) -> bool:
         return self.smartmodule is not None or self.smartmodule_path is not None
+
+
+def _greatest(a, b):
+    if isinstance(a, Integral):
+        return max(a, b)
+    from pyspark.sql import functions as F
+
+    return F.greatest(a, F.lit(b))
+
+
+def _least(a, b):
+    if isinstance(b, Integral):
+        return min(a, b)
+    from pyspark.sql import functions as F
+
+    return F.least(F.lit(a), b)
 
 
 class _Parser(argparse.ArgumentParser):

@@ -17,20 +17,14 @@ filters and projections reach the parquet scan (predicate pushdown + column
 pruning give us, for free, the projection pushdown the reference scaffolded
 but disabled, reference src/consume.rs:41,140-144).
 
-Offset semantics (reference ``calculate_offset``, src/consume.rs:580-605):
-a Fluvio partition log has dense offsets 0..LEO-1, so every position is an
-offset-range predicate — no sort, no shuffle, prunable at the scan:
-
-  -B            offset >= 0
-  -H n          offset >= n            (n past the beginning)
-  --start n     offset >= n
-  -T n          offset >= LEO - n      (last n records)
-  (default)     offset >= LEO          (Offset::end; empty in bounded mode)
-  --end n       offset <= n            (inclusive; the reference parses but
-                 never enforces this — SURVEY §1.4.4 — we enforce it)
-
-LEO (log-end offset) is computed as a 1-row aggregate joined back via
-broadcast — a single plan, no driver-side collect, scale-safe.
+Offset semantics (reference ``calculate_offset``, src/consume.rs:580-605)
+live in ONE resolver, ``ConsumeOptions.offset_window`` (options.py), shared
+by every front end: -B/-H/-T/--start/--end → an inclusive ``[lo, hi]``
+offset window.  A Fluvio partition log has dense offsets 0..LEO-1, so the
+window is an offset-range predicate — no sort, no shuffle, prunable at the
+scan.  ``--end`` is enforced (the reference parses but never enforces it —
+SURVEY §1.4.4).  LEO (log-end offset) is computed as a 1-row aggregate
+joined back via broadcast — a single plan, no driver-side collect.
 
 The row budget (--rows, default 1000; reference src/consume.rs:75-93,:500)
 bounds records *in log order from the start position*: expressed as
@@ -42,7 +36,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -110,36 +104,6 @@ def record_log(
     )
 
 
-def _with_pp_offset_bounds(log: DataFrame, opts: ConsumeOptions) -> DataFrame:
-    """Per-partition offset algebra (reference src/partition.rs:107-134:
-    every partition log owns a dense 0..LEO_p-1 sequence, and offset
-    positions anchor against THAT partition's LEO, never a global
-    counter).  Tail/end resolve via a per-partition LEO aggregate
-    broadcast-joined back on the partition key — n_partitions rows, one
-    metadata-sized shuffle.  ``--rows`` budgets each partition's stream
-    independently (deterministic; the CLI's "stop after N merged
-    records" depends on arrival interleaving, which a deterministic
-    engine cannot honor — documented deviation)."""
-    from pyspark.sql import Window
-
-    start = opts.calculate_start()
-    if start.kind in ("head", "start"):
-        log = log.filter(F.col("offset") >= start.n)
-    elif start.kind in ("tail", "end"):
-        lower = 0 if start.kind == "end" else start.n
-        leo_p = log.groupBy("partition").agg(
-            (F.coalesce(F.max("offset"), F.lit(-1)) + 1).alias("__leo")
-        )
-        log = (
-            log.join(F.broadcast(leo_p), "partition")
-            .filter(F.col("offset") >= F.col("__leo") - F.lit(lower))
-            .drop("__leo")
-        )
-    if opts.end is not None:
-        log = log.filter(F.col("offset") <= opts.end)
-    return log
-
-
 def _budget_order_cols(log: DataFrame) -> list[str]:
     """Ordering for "first N records" budgets.  Offset alone is a total
     order on a raw log, but an array-map fan-out duplicates the parent
@@ -156,7 +120,9 @@ def _pp_row_budget(log: DataFrame, rows: int) -> DataFrame:
     """Per-partition ``--rows`` budget: the first ``rows`` records of
     each partition's stream (applied AFTER the transform chain, like the
     global fallback — a filtering transform changes what "first n"
-    matches)."""
+    matches).  Each partition is budgeted independently: the CLI's
+    "stop after N merged records" depends on arrival interleaving, which
+    a deterministic engine cannot honor (documented deviation)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("partition").orderBy(*_budget_order_cols(log))
@@ -167,23 +133,34 @@ def _pp_row_budget(log: DataFrame, rows: int) -> DataFrame:
     )
 
 
-def _with_offset_bounds(log: DataFrame, opts: ConsumeOptions) -> DataFrame:
-    """Apply the offset algebra as pure predicates on ``offset``."""
-    start = opts.calculate_start()
-    if start.kind == "beginning":
-        pass  # offset >= 0 always holds
-    elif start.kind in ("head", "start"):
-        log = log.filter(F.col("offset") >= start.n)
-    elif start.kind in ("tail", "end"):
-        # LEO as a broadcast 1-row aggregate — no collect, single plan.
-        lower = 0 if start.kind == "end" else start.n
-        leo = log.agg((F.coalesce(F.max("offset"), F.lit(-1)) + 1).alias("__leo"))
-        log = log.crossJoin(F.broadcast(leo)).filter(
-            F.col("offset") >= F.col("__leo") - F.lit(lower)
-        ).drop("__leo")
-    if opts.end is not None:
-        log = log.filter(F.col("offset") <= opts.end)
-    return log
+def _with_offset_window(
+    log: DataFrame, opts: ConsumeOptions, dense: bool, per_partition: bool
+) -> DataFrame:
+    """Filter ``log`` to the options' offset window
+    (``ConsumeOptions.offset_window``) as pure predicates on ``offset``.
+    The log-end offset, when the window needs one, is an in-plan
+    aggregate broadcast back onto every row — one row for the global
+    log, or one row per partition when each partition owns its own
+    dense 0..LEO_p-1 sequence (reference src/partition.rs:107-134) —
+    no driver-side collect, single plan."""
+    leo_aggs = []
+
+    def leo():
+        keys = ["partition"] if per_partition else []
+        leo_aggs.append(log.groupBy(*keys).agg(
+            (F.coalesce(F.max("offset"), F.lit(-1)) + 1).alias("__leo")
+        ))
+        return F.col("__leo")
+
+    lo, hi = opts.offset_window(leo, dense=dense)
+    if leo_aggs:
+        agg = F.broadcast(leo_aggs[0])
+        log = log.join(agg, "partition") if per_partition else log.crossJoin(agg)
+    if isinstance(lo, Column) or lo > 0:
+        log = log.filter(F.col("offset") >= lo)
+    if hi is not None:
+        log = log.filter(F.col("offset") <= hi)
+    return log.drop("__leo") if leo_aggs else log
 
 
 def fluvio_consume(
@@ -232,56 +209,29 @@ def fluvio_consume(
     chain = load_transform_chain(opts)
 
     if per_partition_offsets:
-        log = _with_pp_offset_bounds(log, opts)
+        # --rows budgets each partition's stream AFTER the chain
+        log = _with_offset_window(log, opts, dense=False, per_partition=True)
         log = apply_transform_chain(log, chain)
         if opts.rows is not None:
             log = _pp_row_budget(log, opts.rows)
         return log.select(projection(opts.columns))
 
     # Row budget (--rows, reference src/consume.rs:75-93). Two plans:
-    #  (a) offset-range predicate — when the selection is the dense whole
-    #      log and the chain drops no rows, "first N records" ≡
-    #      "offset < start + N": a pure pushdown predicate, pruned at the
-    #      parquet scan.  This is the scale path: no sort, no per-partition
-    #      top-N heaps, no driver merge.
+    #  (a) offset-window bound — when the selection is the dense whole
+    #      log and the chain drops no rows, "first N records" is
+    #      "offset <= lo + N - 1": a pure pushdown predicate, pruned at
+    #      the parquet scan.  This is the scale path: no sort, no
+    #      per-partition top-N heaps, no driver merge.
     #  (b) ordered limit (TakeOrderedAndProject) — the general fallback
     #      (sub-topic / single-partition selections have sparse offsets in
     #      the stand-in; filtering transforms change the row count).
-    budget_as_predicate = (
-        opts.rows is not None
-        and opts.topic in _WHOLE_LOG_TOPICS
+    dense = (
+        opts.topic in _WHOLE_LOG_TOPICS
         and opts.all_partitions
         and all(spec.uses in _ROW_PRESERVING_TRANSFORMS for spec in chain)
     )
-    start = opts.calculate_start()
-    if budget_as_predicate and start.kind in ("beginning", "head", "start"):
-        lo = 0 if start.kind == "beginning" else start.n
-        log = log.filter(
-            (F.col("offset") >= lo) & (F.col("offset") < lo + opts.rows)
-        )
-        if opts.end is not None:
-            log = log.filter(F.col("offset") <= opts.end)
-        log = apply_transform_chain(log, chain)
-    elif budget_as_predicate and start.kind == "tail":
-        leo = log.agg((F.coalesce(F.max("offset"), F.lit(-1)) + 1).alias("__leo"))
-        # Tail farther back than the log start clamps to the beginning
-        # (Fluvio Offset::from_end semantics) — without the clamp the
-        # [lo, lo+rows) window goes negative and matches nothing.
-        lo = F.greatest(F.col("__leo") - start.n, F.lit(0))
-        log = (
-            log.crossJoin(F.broadcast(leo))
-            .filter(
-                (F.col("offset") >= lo) & (F.col("offset") < lo + opts.rows)
-            )
-            .drop("__leo")
-        )
-        if opts.end is not None:
-            log = log.filter(F.col("offset") <= opts.end)
-        log = apply_transform_chain(log, chain)
-    else:
-        log = _with_offset_bounds(log, opts)
-        log = apply_transform_chain(log, chain)
-        if opts.rows is not None:
-            log = log.orderBy(*_budget_order_cols(log)).limit(opts.rows)
-
+    log = _with_offset_window(log, opts, dense=dense, per_partition=False)
+    log = apply_transform_chain(log, chain)
+    if not dense and opts.rows is not None:
+        log = log.orderBy(*_budget_order_cols(log)).limit(opts.rows)
     return log.select(projection(opts.columns))

@@ -12,10 +12,9 @@ FluvioDataSource)`` the topic reads as
          .option("sf_dir", "/root/testdata/sf0.01").load()
 
 with one ``InputPartition`` per Fluvio partition, so partition
-parallelism is the cluster's, not the driver's.  Offset algebra
-(-B/-H/-T/--start/--end) evaluates worker-side against the parquet
-stand-in; the log-end offset for ``-T`` comes from parquet FOOTER
-STATISTICS (row-group max), not a data scan.
+parallelism is the cluster's, not the driver's.  The log-end offset
+for ``-T`` comes from parquet FOOTER STATISTICS (row-group max), not a
+data scan.
 
 Contract notes:
 * ``fluvio_consume()`` (sources/consume.py) remains the performance
@@ -23,27 +22,30 @@ Contract notes:
   with the query on top.  This DataSource is the connector-ergonomics
   surface: same semantics, Arrow-batched Python reads (one Python
   worker hop per batch).
-* ALL offset algebra resolves at PLAN time, driver-side in
-  ``partitions()`` — each ``InputPartition`` carries a concrete
-  ``[lo, hi]`` offset window, so ``read()`` is a pure bounded scan.
+* ALL offset algebra (-B/-H/-T/--start/--end) resolves at PLAN time in
+  ``partitions()``, through the shared resolver
+  ``ConsumeOptions.offset_window`` (options.py) — each
+  ``InputPartition`` carries a concrete half-open ``[lo, hi)`` offset
+  window, so ``read()`` is a pure bounded scan.
   This mirrors how a real connector plans (offset resolution via the
   cluster's offset/metadata API at plan time, record fetch at execute
   time); over the parquet stand-in the "offset API" is footer
   statistics for the dense whole-log case and a 2–3-column driver read
   for sparse selections (sub-topics / pinned partitions), whose tail
   anchor and row budget depend on which offsets the selection owns.
-* ``--rows`` compiles three ways (the builder's two-plan logic at
-  sources/consume.py:160-204 is the spec): a dense-offset-range bound
-  for ``-A`` on a whole-log topic (``hi = lo + rows - 1``); a LOCAL
-  top-n when a single partition is pinned (that partition is the whole
-  selection); and for ``-A`` over a sparse sub-topic the planner
-  resolves the global budget to an offset bound — the rows-th smallest
-  matching offset at/above the start — before partition planning, so
-  the per-partition readers need no cross-partition coordination
-  (closes the VERDICT r3 parity gap with ``fluvio_consume``).
+* ``--rows`` compiles three ways: a dense-offset-range
+  bound for ``-A`` on a whole-log topic and for every per-partition log
+  (``hi = lo + rows - 1``); a LOCAL top-n when a single partition is
+  pinned (that partition is the whole selection); and for ``-A`` over a
+  sparse sub-topic the planner resolves the global budget to an offset
+  bound — the rows-th smallest matching offset at/above the start —
+  before partition planning, so the per-partition readers need no
+  cross-partition coordination.
 """
 
 from __future__ import annotations
+
+from functools import cache
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -109,18 +111,94 @@ def _read_pp_window(part_dir: str, lo: int, hi: int | None):
 
 
 class _FluvioPartition(InputPartition):
-    """One Fluvio partition plus its plan-time-resolved offset window.
+    """One executor task of the batch or stream reader: a half-open
+    ``[lo, hi)`` offset window (``hi=None``: unbounded) of partition
+    ``pid``'s log.
 
-    ``lo`` is inclusive; ``hi`` is inclusive or None (unbounded);
-    ``budget`` is a LOCAL top-n applied after the window when a single
-    pinned partition is the whole selection."""
+    The window is read from ``server`` (loopback transport), else from
+    the per-partition log ``part_dir``, else from the global stand-in
+    sequence, where ``pid=-1`` keeps every partition.  ``budget`` is a
+    LOCAL top-n applied after the window when a single pinned partition
+    is the whole selection; ``push_filter``/``push_chain`` travel to the
+    server with the fetch."""
 
-    def __init__(self, pid: int, lo: int = 0, hi: int | None = None,
+    def __init__(self, pid: int, lo: int, hi: int | None,
+                 part_dir: str | None = None, server: str | None = None,
+                 push_filter: dict | None = None,
+                 push_chain: list | None = None,
                  budget: int | None = None):
         self.pid = pid
         self.lo = lo
         self.hi = hi
+        self.part_dir = part_dir
+        self.server = server
+        self.push_filter = push_filter
+        self.push_chain = push_chain
         self.budget = budget
+
+
+#: A task that reads nothing (Spark requires at least one partition).
+_EMPTY = _FluvioPartition(-1, 0, 0)
+
+
+def _fetch(p: _FluvioPartition, sf_dir: str | None, topic: str):
+    """Arrow batches of one task's window in the record schema — the
+    ONE executor-side fetch of the batch and stream readers."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if p.hi is not None and p.hi <= p.lo:
+        return
+    if p.server or p.part_dir is not None:
+        if p.server:
+            # loopback transport: the window travels to the server —
+            # the executor-side bounded range read of CONNECTOR.md §1
+            from fluvio_duck_spark.sources.loopback import server_fetch
+
+            tbl = server_fetch(p.server, p.pid, p.lo, p.hi,
+                               flt=p.push_filter, chain=p.push_chain)
+        else:
+            tbl = _read_pp_window(p.part_dir, p.lo, p.hi)
+        offset, ts, value = tbl["offset"], tbl["timestamp"], tbl["value"]
+        part = pa.array([p.pid] * tbl.num_rows, pa.int32())
+    else:
+        # offset window + sub-topic predicate pushed into the parquet
+        # read (row-group pruning on event_id footer statistics)
+        filters = [("event_id", ">=", p.lo)]
+        if p.hi is not None:
+            filters.append(("event_id", "<", p.hi))
+        if topic not in _WHOLE_LOG_TOPICS:
+            filters.append(("event_type", "==", topic))
+        tbl = pq.read_table(
+            os.path.join(sf_dir, "events.parquet"),
+            columns=["event_id", "ts", "user_id", "props"],
+            filters=filters,
+        )
+        uid = tbl["user_id"].to_numpy(zero_copy_only=False)
+        tbl = tbl.append_column(
+            "partition", pa.array((uid % _N_PARTITIONS).astype("int32"))
+        )
+        if p.pid >= 0:
+            tbl = tbl.filter(pc.equal(tbl["partition"], p.pid))
+        if p.pid < 0 or p.budget is not None:
+            # a stream micro-batch (pid=-1) is delivered in offset order
+            # and a local top-n keeps the lowest offsets; a plain batch
+            # task's row order carries no meaning, so it skips the sort
+            tbl = tbl.sort_by("event_id")
+            if p.budget is not None:
+                tbl = tbl.slice(0, p.budget)
+        offset, ts, value = tbl["event_id"], tbl["ts"], tbl["props"]
+        part = tbl["partition"]
+    out = pa.table({
+        "offset": pc.cast(offset, pa.int64()),
+        "timestamp": _ts_to_us(ts),
+        "partition": part,
+        "value": value,
+    })
+    yield from out.to_batches(max_chunksize=8192)
 
 
 class FluvioDataSource(DataSource):
@@ -196,11 +274,6 @@ class FluvioReader(DataSourceReader):
                 "--transform/--smartmodule/-c apply engine-side — bind "
                 "through fluvio_consume(spark, opts, source=<this scan>)"
             )
-        # LOCAL top-n: a pinned single partition is the whole selection,
-        # so the --rows budget applies within the one reader task.
-        self.local_budget = (
-            self.opts.rows is not None and not self.opts.all_partitions
-        )
         # Batch task granule: each partition's offset window is split
         # into ≤max_rows_per_task chunks so scan parallelism exceeds
         # n_partitions (at 100 TB one partition log is far bigger than
@@ -230,17 +303,11 @@ class FluvioReader(DataSourceReader):
 
     def _split(self, pid: int, lo: int, hi: int,
                part_dir: str | None) -> "list[_FluvioPartition]":
-        """Granule-sized [clo, chi]-inclusive chunks of one partition's
-        resolved window (empty when hi < lo)."""
-        out = []
-        for c in range(lo, hi + 1, self.task_rows):
-            p = _FluvioPartition(pid, c, min(c + self.task_rows - 1, hi))
-            p.part_dir = part_dir
-            p.server = self.server
-            p.push_filter = getattr(self, "push_filter", None)
-            p.push_chain = getattr(self, "push_chain", None)
-            out.append(p)
-        return out
+        """Granule-sized chunks of one partition's resolved inclusive
+        window ``[lo, hi]`` (empty when hi < lo)."""
+        return _chunks(pid, lo, hi + 1, self.task_rows, part_dir=part_dir,
+                       server=self.server, push_filter=self.push_filter,
+                       push_chain=self.push_chain)
 
     # -- plan-time offset resolution --------------------------------------
     def _selection_offsets(self):
@@ -269,103 +336,47 @@ class FluvioReader(DataSourceReader):
         off.sort()
         return off
 
-    def _footer_leo(self) -> int:
-        """Whole-log LEO from parquet footer statistics — no data scan."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        leo = -1
-        for frag in _log_fragments(self.sf_dir):
-            pf = pq.ParquetFile(frag)
-            idx = pf.schema_arrow.get_field_index("event_id")
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(idx).statistics
-                if st is not None and st.max is not None:
-                    leo = max(leo, int(st.max))
-        return leo + 1
-
-    def _resolve_window(self) -> tuple[int, int | None]:
-        """Offset algebra → concrete [lo, hi] window, at plan time.
-
-        Dense case (whole log, all partitions): footer-stats LEO and
-        arithmetic bounds only.  Sparse case (sub-topic or pinned
-        partition): the tail anchor is the SELECTION's log-end — the max
+    def _sf_partitions(self):
+        """Offset windows over the global stand-in sequence.  Dense case
+        (whole log, all partitions): footer-statistics LEO and the
+        resolver's arithmetic budget.  Sparse case (sub-topic or pinned
+        partition): the tail anchor is the SELECTION's log end — the max
         offset the selection owns, plus one — matching the builder,
-        which filters the log before applying the offset algebra
-        (sources/consume.py:152-160); likewise real Fluvio resolves -T
-        against the chosen partition's LEO, not some global counter."""
-        dense = (
-            self.topic in _WHOLE_LOG_TOPICS and self.opts.all_partitions
-        )
-        sel = None  # lazily-resolved sorted selection offsets
+        which filters the log before resolving the window; likewise real
+        Fluvio resolves -T against the chosen partition's LEO, not some
+        global counter."""
+        dense = self.topic in _WHOLE_LOG_TOPICS and self.opts.all_partitions
+        if dense:
+            from fluvio_duck_spark.sources.pplog import footer_leo
 
-        start = self.opts.calculate_start()
-        lo = 0
-        if start.kind in ("head", "start"):
-            lo = start.n
-        elif start.kind in ("tail", "end"):
-            if dense:
-                leo = self._footer_leo()
-            else:
-                sel = self._selection_offsets()
-                leo = int(sel[-1]) + 1 if len(sel) else 0
-            lo = leo if start.kind == "end" else max(leo - start.n, 0)
-
-        hi = self.opts.end  # inclusive, may be None
-        if self.opts.rows is not None and not self.local_budget:
-            if dense:
-                # dense offsets: first n at/above lo is pure arithmetic
-                budget_hi = lo + self.opts.rows - 1
-            else:
-                # sparse sub-topic with -A: resolve the global budget to
-                # the rows-th smallest matching offset in [lo, hi]
-                if sel is None:
-                    sel = self._selection_offsets()
-                win = sel[sel >= lo]
+            leo = cache(lambda: footer_leo(_log_fragments(self.sf_dir), "event_id"))
+            lo, hi = self.opts.offset_window(leo, dense=True)
+        else:
+            sel = cache(self._selection_offsets)
+            leo = cache(lambda: int(sel()[-1]) + 1 if len(sel()) else 0)
+            lo, hi = self.opts.offset_window(leo)
+            if not self.opts.all_partitions:
+                # local top-n needs the whole pinned selection in ONE task
+                return [_FluvioPartition(
+                    int(self.opts.partition), lo,
+                    None if hi is None else hi + 1, budget=self.opts.rows,
+                )]
+            if self.opts.rows is not None:
+                # sparse sub-topic with -A: the global budget becomes the
+                # rows-th smallest matching offset in [lo, hi]
+                win = sel()[sel() >= lo]
                 if hi is not None:
                     win = win[win <= hi]
-                if len(win) <= self.opts.rows:
-                    budget_hi = None  # budget exceeds selection: keep all
-                else:
-                    budget_hi = int(win[self.opts.rows - 1])
-            if budget_hi is not None:
-                hi = budget_hi if hi is None else min(hi, budget_hi)
-        return lo, hi
+                if len(win) > self.opts.rows:
+                    # (--rows 0 keeps nothing: an empty window)
+                    hi = int(win[self.opts.rows - 1]) if self.opts.rows else lo - 1
+        hi = leo() - 1 if hi is None else hi
+        out = []
+        for p in range(_N_PARTITIONS):
+            out.extend(self._split(p, lo, hi, None))
+        return out or [_EMPTY]
 
-    # -- log_dir (per-partition offset) planning ---------------------------
-    def _pp_partition_dirs(self) -> dict[int, str]:
-        """partition id → fragment directory of a per-partition log."""
-        from fluvio_duck_spark.sources.pplog import pp_partition_dirs
-
-        return pp_partition_dirs(self.log_dir)
-
-    def _pp_footer_leo(self, part_dir: str) -> int:
-        """One partition's LEO from ITS fragments' footer statistics —
-        the per-replica leo read of reference src/partition.rs:131."""
-        from fluvio_duck_spark.sources.pplog import pp_footer_leo
-
-        return pp_footer_leo(part_dir)
-
-    def _pp_window(self, leo: int) -> tuple[int, int | None]:
-        """One partition's [lo, hi] window from ITS OWN log end —
-        pure arithmetic (offsets are dense per partition), shared by
-        the local log_dir and loopback server transports."""
-        start = self.opts.calculate_start()
-        lo = 0
-        if start.kind in ("head", "start"):
-            lo = start.n
-        elif start.kind in ("tail", "end"):
-            lo = leo if start.kind == "end" else max(leo - start.n, 0)
-        hi = self.opts.end
-        if self.opts.rows is not None:
-            # dense per-partition offsets: each partition's budget
-            # is arithmetic (matches the builder's per-partition
-            # --rows semantics, sources/consume.py::_pp_row_budget)
-            budget_hi = lo + self.opts.rows - 1
-            hi = budget_hi if hi is None else min(hi, budget_hi)
-        return lo, hi
-
+    # -- log_dir / server (per-partition offset) planning -------------------
     def _pp_partitions(self):
         """One InputPartition per partition log, each with a window
         resolved against that partition's OWN log end (no data scan at
@@ -378,121 +389,45 @@ class FluvioReader(DataSourceReader):
             leos = server_parts(self.server)
             fetch = {pid: None for pid in leos}
         else:
-            dirs = self._pp_partition_dirs()
-            leos = {pid: self._pp_footer_leo(d) for pid, d in dirs.items()}
-            fetch = dirs
+            from fluvio_duck_spark.sources import pplog
+
+            fetch = pplog.pp_partition_dirs(self.log_dir)
+            leos = {pid: pplog.pp_footer_leo(d) for pid, d in fetch.items()}
         if not self.opts.all_partitions:
             pid = int(self.opts.partition)
             if pid not in leos:
                 # unknown partition → empty scan (the stand-in's
-                # unknown-topic convention; Spark requires ≥1 partition)
-                p = _FluvioPartition(pid, 0, None)
-                p.empty = True
-                return [p]
+                # unknown-topic convention)
+                return [_EMPTY]
             leos = {pid: leos[pid]}
         out = []
-        for pid in sorted(leos):
-            lo, hi = self._pp_window(leos[pid])
+        for pid, leo in sorted(leos.items()):
+            # dense per-partition offsets: the budget is window arithmetic
+            # (the builder's per-partition --rows semantics)
+            lo, hi = self.opts.offset_window(lambda: leo, dense=True)
             # unbounded → plan-time snapshot at this partition's LEO
-            hi_eff = leos[pid] - 1 if hi is None else min(hi, leos[pid] - 1)
-            out.extend(self._split(pid, lo, hi_eff, fetch.get(pid)))
-        if not out:  # empty windows everywhere; Spark needs ≥1 partition
-            p = _FluvioPartition(-1, 0, None)
-            p.empty = True
-            out.append(p)
-        return out
+            hi = leo - 1 if hi is None else min(hi, leo - 1)
+            out.extend(self._split(pid, lo, hi, fetch[pid]))
+        return out or [_EMPTY]
 
     def partitions(self):
         # reference semantics: partition 0 unless -A/--all-partitions
-        # (options.py:155-156; the reference parses -p but pins 0 —
-        # we honor the parsed value, SURVEY §1.4.2 fix)
+        # (the reference parses -p but pins 0 — we honor the parsed
+        # value, SURVEY §1.4.2 fix)
         if self.log_dir or self.server:
             return self._pp_partitions()
-        lo, hi = self._resolve_window()
-        budget = self.opts.rows if self.local_budget else None
-        if not self.opts.all_partitions:
-            # local top-n needs the whole pinned selection in ONE task
-            return [_FluvioPartition(int(self.opts.partition), lo, hi, budget)]
-        hi_eff = self._footer_leo() - 1 if hi is None else hi
-        out = []
-        for p in range(_N_PARTITIONS):
-            out.extend(self._split(p, lo, hi_eff, None))
-        if not out:
-            p = _FluvioPartition(-1, 0, None)
-            p.empty = True
-            out.append(p)
-        return out
-
-    def _read_pp(self, partition: "_FluvioPartition"):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        hi_excl = None if partition.hi is None else partition.hi + 1
-        if partition.part_dir is None and getattr(partition, "server", None):
-            # loopback transport: the window travels to the server —
-            # the executor-side bounded range read of CONNECTOR.md §1
-            from fluvio_duck_spark.sources.loopback import server_fetch
-
-            tbl = server_fetch(
-                partition.server, partition.pid, partition.lo, hi_excl,
-                flt=getattr(partition, "push_filter", None),
-                chain=getattr(partition, "push_chain", None),
-            )
-        else:
-            tbl = _read_pp_window(partition.part_dir, partition.lo, hi_excl)
-        out = pa.table(
-            {
-                "offset": pc.cast(tbl["offset"], pa.int64()),
-                "timestamp": _ts_to_us(tbl["timestamp"]),
-                "partition": pa.array(
-                    [partition.pid] * tbl.num_rows, pa.int32()
-                ),
-                "value": tbl["value"],
-            }
-        )
-        yield from out.to_batches(max_chunksize=8192)
+        return self._sf_partitions()
 
     def read(self, partition: _FluvioPartition):
-        import os
+        yield from _fetch(partition, self.sf_dir, self.topic)
 
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        if getattr(partition, "empty", False):
-            return
-        if (getattr(partition, "part_dir", None) is not None
-                or getattr(partition, "server", None)):
-            yield from self._read_pp(partition)
-            return
-        # offset window + sub-topic predicate pushed into the parquet
-        # read (row-group pruning on event_id footer statistics)
-        filters = [("event_id", ">=", partition.lo)]
-        if partition.hi is not None:
-            filters.append(("event_id", "<=", partition.hi))
-        if self.topic not in _WHOLE_LOG_TOPICS:
-            filters.append(("event_type", "==", self.topic))
-        tbl = pq.read_table(
-            os.path.join(self.sf_dir, "events.parquet"),
-            columns=["event_id", "ts", "user_id", "props"],
-            filters=filters,
-        )
-        uid = tbl["user_id"].to_numpy(zero_copy_only=False)
-        part = pa.array((uid % _N_PARTITIONS).astype("int32"))
-        tbl = tbl.append_column("partition", part)
-        tbl = tbl.filter(pc.equal(tbl["partition"], partition.pid))
-        if partition.budget is not None:
-            tbl = tbl.sort_by("event_id").slice(0, partition.budget)
-
-        out = pa.table(
-            {
-                "offset": pc.cast(tbl["event_id"], pa.int64()),
-                "timestamp": _ts_to_us(tbl["ts"]),
-                "partition": tbl["partition"],
-                "value": tbl["props"],
-            }
-        )
-        yield from out.to_batches(max_chunksize=8192)
+def _chunks(pid: int, lo: int, hi: int, granule: int, **fields):
+    """Granule-sized ``[c, c + granule)`` tasks tiling ``[lo, hi)``."""
+    return [
+        _FluvioPartition(pid, c, min(c + granule, hi), **fields)
+        for c in range(lo, hi, granule)
+    ]
 
 
 def register_fluvio_source(spark) -> None:
@@ -501,20 +436,6 @@ def register_fluvio_source(spark) -> None:
         spark.dataSource.register(FluvioDataSource)
     except Exception:
         pass  # already registered — Spark raises on duplicate names
-
-
-class _FluvioStreamPartition(InputPartition):
-    """One executor task of a streaming micro-batch: a half-open
-    ``[lo, hi)`` window of ONE partition log's own offsets (pp modes)
-    or of the global stand-in sequence (sf_dir mode)."""
-
-    def __init__(self, pid: int, lo: int, hi: int, part_dir: str | None = None,
-                 server: str | None = None):
-        self.pid = pid
-        self.lo = lo
-        self.hi = hi  # exclusive
-        self.part_dir = part_dir
-        self.server = server
 
 
 class FluvioStreamReader(DataSourceStreamReader):
@@ -637,11 +558,6 @@ class FluvioStreamReader(DataSourceStreamReader):
             )
 
     # -- offset management (driver-side, metadata-only) --------------------
-    def _pp_dirs(self) -> dict[int, str]:
-        from fluvio_duck_spark.sources.pplog import pp_partition_dirs
-
-        return pp_partition_dirs(self.log_dir)
-
     def _leo_map(self) -> dict[str, int]:
         """Current log-end offset per cursor key — metadata only
         (footer statistics or the server's offset RPC), re-probed every
@@ -654,23 +570,15 @@ class FluvioStreamReader(DataSourceStreamReader):
                 for pid, leo in sorted(server_parts(self.server).items())
             }
         if self.log_dir:
-            from fluvio_duck_spark.sources.pplog import pp_footer_leo
+            from fluvio_duck_spark.sources import pplog
 
             return {
-                str(pid): pp_footer_leo(d)
-                for pid, d in sorted(self._pp_dirs().items())
+                str(pid): pplog.pp_footer_leo(d)
+                for pid, d in sorted(pplog.pp_partition_dirs(self.log_dir).items())
             }
-        import pyarrow.parquet as pq
+        from fluvio_duck_spark.sources.pplog import footer_leo
 
-        leo = -1
-        for frag in _log_fragments(self.sf_dir):
-            pf = pq.ParquetFile(frag)
-            idx = pf.schema_arrow.get_field_index("event_id")
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(idx).statistics
-                if st is not None and st.max is not None:
-                    leo = max(leo, int(st.max))
-        return {"offset": leo + 1}
+        return {"offset": footer_leo(_log_fragments(self.sf_dir), "event_id")}
 
     def initialOffset(self) -> dict:
         if self.server or self.log_dir:
@@ -713,90 +621,30 @@ class FluvioStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         self._learn_position(start, end)
-        out: list[_FluvioStreamPartition] = []
-        if self.log_dir or self.server:
-            if self.server:
-                from fluvio_duck_spark.sources.loopback import server_parts
+        if self.server:
+            from fluvio_duck_spark.sources.loopback import server_parts
 
-                fetch = {pid: None for pid in server_parts(self.server)}
-            else:
-                fetch = self._pp_dirs()
-            for pid, d in sorted(fetch.items()):
-                lo = max(
-                    int(start.get(str(pid), 0)),
-                    self._floor.get(str(pid), 0),
-                )
-                hi = int(end.get(str(pid), lo))
-                for c in range(lo, hi, self.granule):
-                    p = _FluvioStreamPartition(
-                        pid, c, min(c + self.granule, hi),
-                        part_dir=d, server=self.server,
-                    )
-                    p.push_filter = self.push_filter
-                    p.push_chain = self.push_chain
-                    out.append(p)
-            return out
-        lo = max(int(start["offset"]), self._floor.get("offset", 0))
-        hi = int(end["offset"])
-        for c in range(lo, hi, self.granule):
-            out.append(_FluvioStreamPartition(-1, c, min(c + self.granule, hi)))
+            fetch = {pid: None for pid in server_parts(self.server)}
+        elif self.log_dir:
+            from fluvio_duck_spark.sources.pplog import pp_partition_dirs
+
+            fetch = pp_partition_dirs(self.log_dir)
+        else:
+            # the global stand-in sequence: one cursor, every partition
+            fetch = {-1: None}
+        out: list[_FluvioPartition] = []
+        for pid, d in sorted(fetch.items()):
+            key = "offset" if pid < 0 else str(pid)
+            lo = max(int(start.get(key, 0)), self._floor.get(key, 0))
+            hi = int(end.get(key, lo))
+            out.extend(_chunks(
+                pid, lo, hi, self.granule, part_dir=d, server=self.server,
+                push_filter=self.push_filter, push_chain=self.push_chain,
+            ))
         return out
 
-    def read(self, partition: _FluvioStreamPartition):
-        import os
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        if partition.part_dir is not None or partition.server:
-            if partition.part_dir is None:
-                from fluvio_duck_spark.sources.loopback import server_fetch
-
-                tbl = server_fetch(
-                    partition.server, partition.pid, partition.lo,
-                    partition.hi,
-                    flt=getattr(partition, "push_filter", None),
-                    chain=getattr(partition, "push_chain", None),
-                )
-            else:
-                tbl = _read_pp_window(
-                    partition.part_dir, partition.lo, partition.hi
-                )
-            out = pa.table(
-                {
-                    "offset": pc.cast(tbl["offset"], pa.int64()),
-                    "timestamp": _ts_to_us(tbl["timestamp"]),
-                    "partition": pa.array(
-                        [partition.pid] * tbl.num_rows, pa.int32()
-                    ),
-                    "value": tbl["value"],
-                }
-            )
-            yield from out.to_batches(max_chunksize=8192)
-            return
-        filters = [
-            ("event_id", ">=", partition.lo), ("event_id", "<", partition.hi)
-        ]
-        if self.topic not in _WHOLE_LOG_TOPICS:
-            filters.append(("event_type", "==", self.topic))
-        tbl = pq.read_table(
-            os.path.join(self.sf_dir, "events.parquet"),
-            columns=["event_id", "ts", "user_id", "props"],
-            filters=filters,
-        ).sort_by("event_id")
-        uid = tbl["user_id"].to_numpy(zero_copy_only=False)
-        out = pa.table(
-            {
-                "offset": pc.cast(tbl["event_id"], pa.int64()),
-                "timestamp": _ts_to_us(tbl["ts"]),
-                "partition": pa.array(
-                    (uid % _N_PARTITIONS).astype("int32")
-                ),
-                "value": tbl["props"],
-            }
-        )
-        yield from out.to_batches(max_chunksize=8192)
+    def read(self, partition: _FluvioPartition):
+        yield from _fetch(partition, self.sf_dir, self.topic)
 
     def commit(self, end: dict) -> None:
         pass  # the log is immutable — nothing to clean up

@@ -189,11 +189,13 @@ class RecordServer(socketserver.ThreadingTCPServer):
                 "value": tbl["value"].cast(pa.string()),
             })
             # write-then-rename so the fragment appears ATOMICALLY: a
-            # concurrent fetch/parts glob (other handler threads don't
-            # hold _append_lock) must never see a half-written footer
-            # (ADVICE r8)
-            final = os.path.join(part_dir, f"produced-{base:012d}.parquet")
-            tmp = final + ".inprogress"
+            # concurrent fetch/parts (other handler threads don't hold
+            # _append_lock) must never see a half-written footer.  The
+            # "."-prefixed staging name is skipped by both the
+            # ``*.parquet`` footer glob and pyarrow's dataset discovery.
+            name = f"produced-{base:012d}.parquet"
+            final = os.path.join(part_dir, name)
+            tmp = os.path.join(part_dir, f".{name}.inprogress")
             pq.write_table(out, tmp)
             os.rename(tmp, final)
         return {"base_offset": base, "n": tbl.num_rows}

@@ -242,24 +242,30 @@ def pp_partition_dirs(log_dir: str) -> dict[int, str]:
     return out
 
 
-def pp_footer_leo(part_dir: str) -> int:
-    """One partition log's LEO from its fragments' parquet footer
-    statistics — the per-replica leo read of reference
-    src/partition.rs:131.  Metadata-only: footers are parsed, no row
-    group is decoded."""
-    import glob
-
+def footer_leo(files, column: str) -> int:
+    """Log-end offset (max ``column`` + 1; 0 for an empty log) from the
+    parquet footer statistics of ``files`` — metadata only: footers are
+    parsed, no row group is decoded.  Shared by every per-partition log
+    (``pp_footer_leo``) and the global stand-in (sources/datasource.py)."""
     import pyarrow.parquet as pq
 
     leo = -1
-    for frag in sorted(glob.glob(os.path.join(part_dir, "*.parquet"))):
+    for frag in files:
         pf = pq.ParquetFile(frag)
-        idx = pf.schema_arrow.get_field_index("offset")
+        idx = pf.schema_arrow.get_field_index(column)
         for rg in range(pf.metadata.num_row_groups):
             st = pf.metadata.row_group(rg).column(idx).statistics
             if st is not None and st.max is not None:
                 leo = max(leo, int(st.max))
     return leo + 1
+
+
+def pp_footer_leo(part_dir: str) -> int:
+    """One partition log's LEO from its fragments' footer statistics —
+    the per-replica leo read of reference src/partition.rs:131."""
+    import glob
+
+    return footer_leo(sorted(glob.glob(os.path.join(part_dir, "*.parquet"))), "offset")
 
 
 #: DuckDB twin of ``per_partition_log`` — keep the two derivations in

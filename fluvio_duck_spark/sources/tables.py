@@ -42,16 +42,21 @@ def _schema_key(path: str) -> tuple:
     """Cache key that survives in-place rewrites of DIRECTORY tables.
 
     A file table keys on its own mtime.  A directory table additionally
-    keys on the max top-level child mtime: rewriting one file in place
-    (same top-level name set) does not bump the directory's own mtime,
-    so the bare (path, dir-mtime) key could pin a stale schema in a
-    long-lived session (VERDICT r13 #3).  The extra listdir costs ~50 µs
-    vs the ~135 ms footer inference the cache exists to avoid."""
+    keys on the max mtime of every file and subdirectory below it:
+    rewriting one file in place (same name set) bumps neither the
+    table directory's own mtime nor its parent's — at any nesting depth,
+    e.g. a ``partition=<k>/`` layout — so a shallower key could pin a
+    stale schema in a long-lived session.  The walk costs far less than
+    the ~135 ms footer inference the cache exists to avoid."""
     m = os.path.getmtime(path)
     if not os.path.isdir(path):
         return (path, m)
     newest = max(
-        (os.path.getmtime(os.path.join(path, c)) for c in os.listdir(path)),
+        (
+            os.path.getmtime(os.path.join(base, name))
+            for base, dirs, files in os.walk(path)
+            for name in dirs + files
+        ),
         default=0.0,
     )
     return (path, m, newest)

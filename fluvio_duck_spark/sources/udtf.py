@@ -219,21 +219,14 @@ class FluvioConsumeUDTF:
             rows = [r for r in rows if r[4] == o.topic]
         if not o.all_partitions:
             rows = [r for r in rows if r[2] == o.partition]
-        # global offset algebra, mirroring the builder's bounded branch
-        leo = max((r[0] for r in rows), default=-1) + 1
-        start = o.calculate_start()
-        if start.kind == "beginning":
-            lo = 0
-        elif start.kind in ("head", "start"):
-            lo = start.n
-        elif start.kind == "tail":
-            lo = max(0, leo - start.n)
-        else:  # end — bounded read from the log end is empty
-            lo = leo
-        rows = [r for r in rows if r[0] >= lo]
-        if o.end is not None:
-            rows = [r for r in rows if r[0] <= o.end]
-        rows.sort(key=lambda r: r[0])
+        # the builder's global offset window over the same selection
+        lo, hi = o.offset_window(
+            lambda: max((r[0] for r in rows), default=-1) + 1
+        )
+        rows = sorted(
+            (r for r in rows if r[0] >= lo and (hi is None or r[0] <= hi)),
+            key=lambda r: r[0],
+        )
         if o.rows is not None:
             rows = rows[: o.rows]
 

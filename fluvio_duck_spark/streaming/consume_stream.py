@@ -108,20 +108,22 @@ def fluvio_consume_stream(
     if isinstance(opts, str):
         opts = parse_consume_opts(opts)
 
-    start = opts.calculate_start()
-    if start.kind in ("tail", "end"):
+    def no_leo():
         raise ConsumeOptError(
-            f"offset position {start.kind!r} requires a bounded scan; "
-            "use -B/-H/--start in streaming mode (or batch fluvio_consume)"
+            "the log-end offset (-T/--tail, default end position) "
+            "requires a bounded scan; use -B/-H/--start in streaming mode "
+            "(or batch fluvio_consume)"
         )
+
+    lo, hi = opts.offset_window(no_leo)
 
     log = source if source is not None else record_log_stream(spark, sf_dir, opts.topic)
     if not opts.all_partitions:
         log = log.filter(F.col("partition") == opts.partition)
-    if start.kind in ("head", "start"):
-        log = log.filter(F.col("offset") >= start.n)
-    if opts.end is not None:
-        log = log.filter(F.col("offset") <= opts.end)
+    if lo:
+        log = log.filter(F.col("offset") >= lo)
+    if hi is not None:
+        log = log.filter(F.col("offset") <= hi)
 
     log = apply_transform_chain(log, load_transform_chain(opts))
     return log.select(projection(opts.columns))

@@ -668,10 +668,11 @@ def test_consume_udtf_quirk_values_parity(spark, tmp_path):
 
 
 def test_table_schema_cache_detects_in_place_rewrite(spark, tmp_path):
-    """VERDICT r13 #3: for a DIRECTORY table, rewriting one file in place
-    (same top-level entry set) does not bump the directory mtime, so a
-    (path, dir-mtime) cache key would pin the stale schema for the rest
-    of the session.  The key must also track the max child mtime."""
+    """For a DIRECTORY table, rewriting one file in place (same entry
+    set) bumps no directory mtime above it, so a (path, dir-mtime) cache
+    key would pin the stale schema for the rest of the session.  The key
+    must track the newest mtime at every depth: a flat layout and a
+    nested ``partition=<k>/`` layout."""
     import os
 
     import pyarrow as pa
@@ -679,28 +680,37 @@ def test_table_schema_cache_detects_in_place_rewrite(spark, tmp_path):
 
     from fluvio_duck_spark.sources.tables import table_schema
 
-    tbl_dir = tmp_path / "t.parquet"
-    tbl_dir.mkdir()
-    f = str(tbl_dir / "part-000.parquet")
-    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), f)
-    old = table_schema(spark, str(tbl_dir))
-    assert [fld.name for fld in old.fields] == ["a"]
+    for layout, rel, before, after in (
+        ("flat", "part-000.parquet", ["a"], ["a", "b"]),
+        ("nested", "partition=0/part-000.parquet",
+         ["a", "partition"], ["a", "b", "partition"]),
+    ):
+        tbl_dir = tmp_path / layout / "t.parquet"
+        f = tbl_dir / rel
+        f.parent.mkdir(parents=True)
+        pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), str(f))
+        old = table_schema(spark, str(tbl_dir))
+        assert old.fieldNames() == before, layout
 
-    dir_mtime = os.path.getmtime(tbl_dir)
-    # in-place rewrite: same file name, wider schema
-    pq.write_table(
-        pa.table(
-            {
-                "a": pa.array([1, 2], pa.int64()),
-                "b": pa.array(["x", "y"], pa.string()),
-            }
-        ),
-        f,
-    )
-    # force the stale scenario deterministically: child mtime moves
-    # forward, directory mtime pinned to its pre-rewrite value
-    os.utime(f, (dir_mtime + 2, dir_mtime + 2))
-    os.utime(tbl_dir, (dir_mtime, dir_mtime))
+        dir_mtimes = {
+            d: os.path.getmtime(d) for d in {tbl_dir, f.parent}
+        }
+        # in-place rewrite: same file name, wider schema
+        pq.write_table(
+            pa.table(
+                {
+                    "a": pa.array([1, 2], pa.int64()),
+                    "b": pa.array(["x", "y"], pa.string()),
+                }
+            ),
+            str(f),
+        )
+        # force the stale scenario deterministically: the file's mtime
+        # moves forward, every directory mtime pinned to its old value
+        newest = max(dir_mtimes.values()) + 2
+        os.utime(f, (newest, newest))
+        for d, m in dir_mtimes.items():
+            os.utime(d, (m, m))
 
-    new = table_schema(spark, str(tbl_dir))
-    assert [fld.name for fld in new.fields] == ["a", "b"]
+        new = table_schema(spark, str(tbl_dir))
+        assert new.fieldNames() == after, layout

@@ -458,6 +458,44 @@ def test_concurrent_producers_dense_gapless(tmp_path):
         srv.stop()
 
 
+def test_fetch_and_parts_skip_half_written_fragment(tmp_path, monkeypatch):
+    """A produce stages its fragment inside the partition directory
+    before the atomic rename.  A fetch or parts call that runs while the
+    staged file is still half-written must not open it: both see exactly
+    the committed log."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fluvio_duck_spark.sources.loopback import server_produce
+
+    def batch(n: int):
+        return pa.table({
+            "timestamp": pa.array([0] * n, pa.timestamp("us")),
+            "value": pa.array(['{"k": %d}' % i for i in range(n)]),
+        })
+
+    srv = RecordServer(str(tmp_path / "log")).start()
+    try:
+        server_produce(srv.address, 0, batch(3))
+        write_table, seen = pq.write_table, {}
+
+        def half_written(table, where, **kwargs):
+            with open(where, "wb") as fh:
+                fh.write(b"PAR1")  # magic bytes, no footer yet
+            seen["parts"] = server_parts(srv.address)
+            seen["fetch"] = server_fetch(
+                srv.address, 0, 0, None
+            )["offset"].to_pylist()
+            write_table(table, where, **kwargs)
+
+        monkeypatch.setattr(pq, "write_table", half_written)
+        server_produce(srv.address, 0, batch(2))
+        assert seen == {"parts": {0: 3}, "fetch": [0, 1, 2]}
+        assert server_parts(srv.address) == {0: 5}
+    finally:
+        srv.stop()
+
+
 def test_chain_semantics_match_engine_jolt(spark, log_dir):
     """The server chain interpreter must be BYTE-identical to the
     engine's jolt interpretation (transforms.py) — including
@@ -833,7 +871,7 @@ def test_fold_pushdown_plans_one_task_per_partition(server):
     assert len(whole) == n_parts  # ...until a fold is pushed
     spans = sorted((p.pid, p.lo, p.hi) for p in whole)
     leos = server_parts(server.address)
-    assert spans == [(pid, 0, leo - 1) for pid, leo in sorted(leos.items())]
+    assert spans == [(pid, 0, leo) for pid, leo in sorted(leos.items())]
 
 
 def test_stream_rejects_fold_chain(server):

@@ -93,18 +93,15 @@ def test_pinned_missing_partition_is_empty(spark, log_dir):
 
 
 def test_footer_leo_matches_data(spark, log_dir):
-    from fluvio_duck_spark.options import parse_consume_opts
-    from fluvio_duck_spark.sources.datasource import FluvioReader
+    from fluvio_duck_spark.sources.pplog import pp_footer_leo, pp_partition_dirs
 
-    reader = FluvioReader({"log_dir": log_dir, "args": "-A -B"})
-    dirs = reader._pp_partition_dirs()
     counts = {
         r["partition"]: r["n"]
         for r in _ds(spark, log_dir, "-A -B --rows 1000000")
         .groupBy("partition").agg(F.count("*").alias("n")).collect()
     }
-    for pid, d in dirs.items():
-        assert reader._pp_footer_leo(d) == counts[pid]
+    for pid, d in pp_partition_dirs(log_dir).items():
+        assert pp_footer_leo(d) == counts[pid]
 
 
 def _fetch_range(reader, start: dict, end: dict) -> list[tuple]:
@@ -423,14 +420,14 @@ def test_batch_reader_chunks_partition_windows(spark, log_dir):
     assert len(big.partitions()) == 4
     assert read_all(small) == read_all(big)
 
-    # chunk windows tile each partition's [0, LEO-1] exactly
+    # half-open chunk windows tile each partition's [0, LEO) exactly
     spans = {}
     for p in small.partitions():
         spans.setdefault(p.pid, []).append((p.lo, p.hi))
     for pid, leo in leos.items():
         tiles = sorted(spans[pid])
-        assert tiles[0][0] == 0 and tiles[-1][1] == leo - 1
-        assert all(b[0] == a[1] + 1 for a, b in zip(tiles, tiles[1:]))
+        assert tiles[0][0] == 0 and tiles[-1][1] == leo
+        assert all(b[0] == a[1] for a, b in zip(tiles, tiles[1:]))
 
     # pp mode: a pinned --rows is ARITHMETIC (dense offsets → exact
     # window), so it chunks like any window and still reads exactly 7

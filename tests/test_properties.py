@@ -6,7 +6,7 @@ explore thousands of cases."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from fluvio_duck_spark.options import (
@@ -16,6 +16,39 @@ from fluvio_duck_spark.options import (
 
 TOPIC = st.sampled_from(["events", "clicks", "transit-topic"])
 NONNEG = st.integers(min_value=0, max_value=2**40)
+POSITION = st.sampled_from(["-B", "-H", "-T", "--start", "none"])
+
+
+def position_argv(pos: str, n: int, end: int | None = None,
+                  rows: int | None = None) -> list[str]:
+    """Option-string flags for one position/end/rows combination
+    (``pos="none"``: no position flag, the default Offset::end)."""
+    argv = {"-B": ["-B"], "none": []}.get(pos, [pos, str(n)])
+    if end is not None:
+        argv += ["--end", str(end)]
+    if rows is not None:
+        argv += ["--rows", str(rows)]
+    return argv
+
+
+def crossing(pos: str, n: int, end: int | None) -> bool:
+    """``--start n --end e`` with e < n: rejected at parse time."""
+    return pos == "--start" and end is not None and end < n
+
+
+def offset_model(offsets, pos: str, n: int, end: int | None,
+                 rows: int | None) -> list[int]:
+    """The reference's offset algebra as plain Python over one log's
+    offsets (reference src/consume.rs:580-605): position filter
+    anchored at this log's own end → inclusive ``--end`` → the first
+    ``rows`` in offset order.  The one model every consume front end
+    is checked against."""
+    offsets = sorted(offsets)
+    leo = offsets[-1] + 1 if offsets else 0
+    lo = {"-B": 0, "-H": n, "--start": n, "-T": max(leo - n, 0),
+          "none": leo}[pos]
+    seq = [o for o in offsets if o >= lo and (end is None or o <= end)]
+    return seq if rows is None else seq[:rows]
 
 
 @given(topic=TOPIC, n=NONNEG)
@@ -57,6 +90,42 @@ def test_start_end_crossing_always_rejected(topic, s, e):
 def test_position_flags_pairwise_exclusive(topic, flags):
     with pytest.raises(ConsumeOptError):
         parse_consume_opts(f"{topic} {' '.join(flags)}")
+
+
+@settings(max_examples=300)
+@given(
+    pos=POSITION,
+    n=st.integers(min_value=0, max_value=70),
+    end=st.one_of(st.none(), st.integers(min_value=0, max_value=70)),
+    rows=st.one_of(st.none(), st.integers(min_value=0, max_value=70)),
+    log=st.one_of(
+        st.integers(min_value=0, max_value=60).map(range),
+        st.sets(st.integers(min_value=0, max_value=60)),
+    ),
+)
+def test_offset_window_matches_model(pos, n, end, rows, log):
+    """``ConsumeOptions.offset_window`` vs the pure-Python model, over
+    dense logs (every offset below LEO present: the resolver folds
+    ``--rows`` into the window) and sparse ones (the caller applies the
+    budget).  LEO is asked for only by -T and the default end."""
+    from hypothesis import assume
+
+    assume(not crossing(pos, n, end))
+    offsets = sorted(log)
+    dense = isinstance(log, range)
+    opts = parse_consume_opts(["events", *position_argv(pos, n, end, rows)])
+    asked = []
+
+    def leo() -> int:
+        asked.append(True)
+        return offsets[-1] + 1 if offsets else 0
+
+    lo, hi = opts.offset_window(leo, dense=dense)
+    assert bool(asked) == (pos in ("-T", "none"))
+    got = [o for o in offsets if lo <= o and (hi is None or o <= hi)]
+    if not dense:
+        got = got[: opts.rows]
+    assert got == offset_model(offsets, pos, n, end, opts.rows)
 
 
 _IDENT = st.from_regex(r"[A-Za-z][A-Za-z0-9_]{0,10}", fullmatch=True)
@@ -219,7 +288,7 @@ def tiny_log(request):
 
 @settings(max_examples=20, deadline=None)
 @given(
-    pos=st.sampled_from(["-B", "-H", "-T", "--start", "none"]),
+    pos=POSITION,
     n=st.integers(min_value=0, max_value=60),
     end=st.one_of(st.none(), st.integers(min_value=0, max_value=60)),
     rows=st.one_of(st.none(), st.integers(min_value=0, max_value=60)),
@@ -231,36 +300,12 @@ def test_consume_offsets_match_python_model(spark, tiny_log, pos, n, end, rows):
     from fluvio_duck_spark.options import ConsumeOptError
     from fluvio_duck_spark.sources.consume import fluvio_consume
 
-    argv = ["events", "-A"]
-    if pos == "-B":
-        argv += ["-B"]
-    elif pos in ("-H", "-T", "--start"):
-        argv += [pos, str(n)]
-    if end is not None:
-        argv += ["--end", str(end)]
-    if rows is not None:
-        argv += ["--rows", str(rows)]
-
-    N = 40
-    log = list(range(N))
-    if pos == "-B":
-        model = log
-    elif pos == "-H" or pos == "--start":
-        model = [o for o in log if o >= n]
-    elif pos == "-T":
-        model = [o for o in log if o >= max(N - n, 0)]
-    else:  # default Offset::end -> empty in bounded mode
-        model = []
-    if end is not None:
-        model = [o for o in model if o <= end]
-    if rows is not None:
-        model = model[:rows]
-
-    crossing = pos == "--start" and end is not None and end < n
-    if crossing:
+    argv = ["events", "-A", *position_argv(pos, n, end, rows)]
+    if crossing(pos, n, end):
         with pytest.raises(ConsumeOptError):
             fluvio_consume(spark, argv, source=tiny_log)
         return
+    model = offset_model(range(40), pos, n, end, rows)
     got = sorted(
         r.offset
         for r in fluvio_consume(spark, argv, source=tiny_log)
@@ -283,20 +328,10 @@ def test_consume_partition_select_matches_model(spark, tiny_log, part, pos, n, r
     partition, exactly like consume_topic_tail's documented semantics)."""
     from fluvio_duck_spark.sources.consume import fluvio_consume
 
-    argv = ["events", "-p", str(part)]
-    argv += ["-B"] if pos == "-B" else [pos, str(n)]
-    if rows is not None:
-        argv += ["--rows", str(rows)]
-
+    argv = ["events", "-p", str(part), *position_argv(pos, n, rows=rows)]
+    # -T anchors at the SELECTED partition's LEO: max(sel) + 1
     sel = [o for o in range(40) if o % 4 == part]
-    if pos == "-B":
-        model = sel
-    elif pos == "-H":
-        model = [o for o in sel if o >= n]
-    else:  # -T: offset >= (selected LEO) - n
-        model = [o for o in sel if o >= max(sel) + 1 - n]
-    if rows is not None:
-        model = model[:rows]
+    model = offset_model(sel, pos, n, None, rows)
 
     got = sorted(
         r.offset
@@ -492,7 +527,7 @@ def tiny_pp_log(request):
 
 @settings(max_examples=20, deadline=None)
 @given(
-    pos=st.sampled_from(["-B", "-H", "-T", "--start", "none"]),
+    pos=POSITION,
     n=st.integers(min_value=0, max_value=25),
     end=st.one_of(st.none(), st.integers(min_value=0, max_value=25)),
     rows=st.one_of(st.none(), st.integers(min_value=0, max_value=25)),
@@ -505,40 +540,18 @@ def test_pp_consume_matches_python_model(spark, tiny_pp_log, pos, n, end, rows):
     from fluvio_duck_spark.options import ConsumeOptError
     from fluvio_duck_spark.sources.consume import fluvio_consume
 
-    argv = ["events", "-A"]
-    if pos == "-B":
-        argv += ["-B"]
-    elif pos in ("-H", "-T", "--start"):
-        argv += [pos, str(n)]
-    if end is not None:
-        argv += ["--end", str(end)]
-    if rows is not None:
-        argv += ["--rows", str(rows)]
-
-    lens = {p: 10 + 3 * p for p in range(4)}
-    model = []
-    for p, length in lens.items():
-        if pos == "-B":
-            seq = list(range(length))
-        elif pos in ("-H", "--start"):
-            seq = [o for o in range(length) if o >= n]
-        elif pos == "-T":
-            seq = [o for o in range(length) if o >= max(length - n, 0)]
-        else:  # default Offset::end → empty per partition in bounded mode
-            seq = []
-        if end is not None:
-            seq = [o for o in seq if o <= end]
-        if rows is not None:
-            seq = seq[:rows]
-        model.extend((p, o) for o in seq)
-
-    crossing = pos == "--start" and end is not None and end < n
-    if crossing:
+    argv = ["events", "-A", *position_argv(pos, n, end, rows)]
+    if crossing(pos, n, end):
         with pytest.raises(ConsumeOptError):
             fluvio_consume(
                 spark, argv, source=tiny_pp_log, per_partition_offsets=True
             )
         return
+    model = [
+        (p, o)
+        for p in range(4)
+        for o in offset_model(range(10 + 3 * p), pos, n, end, rows)
+    ]
     got = sorted(
         (r.partition, r.offset)
         for r in fluvio_consume(
@@ -583,7 +596,7 @@ def tiny_pp_dir(tmp_path_factory):
 
 @settings(max_examples=60, deadline=None)
 @given(
-    pos=st.sampled_from(["-B", "-H", "-T", "--start", "none"]),
+    pos=POSITION,
     n=st.integers(min_value=0, max_value=25),
     end=st.one_of(st.none(), st.integers(min_value=0, max_value=25)),
     rows=st.one_of(st.none(), st.integers(min_value=0, max_value=25)),
@@ -597,24 +610,15 @@ def test_datasource_pp_matches_python_model(
     task chunking) vs the pure-Python per-partition model, driven
     WITHOUT Spark: for every position/end/rows/pin/granule combination
     the union of chunk reads equals the model, chunks never overlap,
-    and the task split never changes results.  Pins the round-8
-    chunking path against the same semantics the builder property test
-    pins (reference src/partition.rs:107-134)."""
+    and the task split never changes results.  Pins the chunking path
+    against the same model as the builder property tests (reference
+    src/partition.rs:107-134)."""
     from fluvio_duck_spark.options import ConsumeOptError
     from fluvio_duck_spark.sources.datasource import FluvioReader
 
     argv = ["-A"] if pin is None else ["-p", str(pin)]
-    if pos == "-B":
-        argv += ["-B"]
-    elif pos in ("-H", "-T", "--start"):
-        argv += [pos, str(n)]
-    if end is not None:
-        argv += ["--end", str(end)]
-    if rows is not None:
-        argv += ["--rows", str(rows)]
-
-    crossing = pos == "--start" and end is not None and end < n
-    if crossing:
+    argv += position_argv(pos, n, end, rows)
+    if crossing(pos, n, end):
         with pytest.raises(ConsumeOptError):
             FluvioReader({"log_dir": tiny_pp_dir, "args": " ".join(argv)})
         return
@@ -623,24 +627,13 @@ def test_datasource_pp_matches_python_model(
         "log_dir": tiny_pp_dir, "args": " ".join(argv),
         "max_rows_per_task": str(granule),
     })
-
-    lens = {p: 10 + 3 * p for p in range(4)}
-    pids = lens if pin is None else ({pin: lens[pin]} if pin in lens else {})
+    pids = [p for p in range(4) if pin is None or p == pin]
     budget = rows if rows is not None else 1000  # parser default
-    model = []
-    for p, length in pids.items():
-        if pos == "-B":
-            seq = list(range(length))
-        elif pos in ("-H", "--start"):
-            seq = [o for o in range(length) if o >= n]
-        elif pos == "-T":
-            seq = [o for o in range(length) if o >= max(length - n, 0)]
-        else:  # default Offset::end → empty over a static log
-            seq = []
-        if end is not None:
-            seq = [o for o in seq if o <= end]
-        seq = seq[:budget]  # pp budget = dense window arithmetic
-        model.extend((p, o) for o in seq)
+    model = [
+        (p, o)
+        for p in pids
+        for o in offset_model(range(10 + 3 * p), pos, n, end, budget)
+    ]
 
     parts = reader.partitions()
     got = [
@@ -713,3 +706,146 @@ def test_stream_partitions_tile_any_cursor_range(
         k = str(pid)
         assert tiles[0][0] == lo_map[k] and tiles[-1][1] == end[k]
         assert all(b[0] == a[1] for a, b in zip(tiles, tiles[1:]))
+
+
+@pytest.fixture(scope="module")
+def tiny_topic(request, tmp_path_factory):
+    """One 48-event topic in both storage layouts, plus a record server:
+    ``sf`` holds an ``events.parquet`` with the fixture schema (global
+    offsets = event_id; partition = user_id % 4; four event types) and
+    ``log`` the same records as per-partition logs, two fragments each
+    (offsets = rank by event_id within the partition).  Every payload
+    is ``{"k": event_id}``, so any front end's rows name their events."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fluvio_duck_spark.sources.loopback import RecordServer
+
+    root = tmp_path_factory.mktemp("tiny_topic")
+    ids = list(range(48))
+    uids = [(5 * i) % 11 for i in ids]
+    types = [("click", "view", "click", "buy")[i % 4] for i in ids]
+    ts = [1_700_000_000_000_000 + 1000 * i for i in ids]
+    props = ['{"k": %d}' % i for i in ids]
+    (root / "sf").mkdir()
+    pq.write_table(pa.table({
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array(ts, pa.timestamp("us")),
+        "user_id": pa.array(uids, pa.int64()),
+        "event_type": types,
+        "value": [float(i) for i in ids],
+        "props": props,
+    }), str(root / "sf" / "events.parquet"))
+    pp_ids = {p: [i for i in ids if uids[i] % 4 == p] for p in range(4)}
+    for p, members in pp_ids.items():
+        d = root / "log" / f"partition={p}"
+        d.mkdir(parents=True)
+        cut = len(members) // 2
+        for tag, lo, hi in (("a", 0, cut), ("b", cut, len(members))):
+            pq.write_table(pa.table({
+                "offset": pa.array(range(lo, hi), pa.int64()),
+                "timestamp": pa.array([ts[i] for i in members[lo:hi]],
+                                      pa.timestamp("us")),
+                "value": [props[i] for i in members[lo:hi]],
+            }), str(d / f"part-{tag}.parquet"))
+    srv = RecordServer(str(root / "log")).start()
+    yield {
+        "sf": str(root / "sf"), "log": str(root / "log"),
+        "server": srv.address, "types": types, "pp_ids": pp_ids,
+    }
+    srv.stop()
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    topic=st.sampled_from(["events", "click"]),
+    pin=st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+    pos=POSITION,
+    n=st.integers(min_value=0, max_value=30),
+    end=st.one_of(st.none(), st.integers(min_value=0, max_value=50)),
+    rows=st.one_of(st.none(), st.integers(min_value=0, max_value=30)),
+)
+# a zero budget over a sparse sub-topic must keep no row
+@example(topic="click", pin=None, pos="-B", n=0, end=None, rows=0)
+@example(topic="events", pin=2, pos="-T", n=5, end=None, rows=None)
+def test_front_ends_agree_on_offsets(spark, tiny_topic, topic, pin, pos, n,
+                                     end, rows):
+    """Every consume front end resolves one option string to the same
+    records as the shared model: the builder (global and
+    ``per_partition_offsets``), the ``fluvio`` DataSource (``sf_dir``,
+    ``log_dir``, ``server``), the consume UDTF and the stream.  The
+    stream takes only -B/-H/--start (no log end) and no ``--rows``
+    budget (an unbounded stream has no one-shot row count)."""
+    import json
+
+    from hypothesis import assume
+
+    from fluvio_duck_spark.sources.consume import fluvio_consume
+    from fluvio_duck_spark.sources.datasource import register_fluvio_source
+    from fluvio_duck_spark.sources.pplog import per_partition_log
+    from fluvio_duck_spark.sources.udtf import register_sql_table_functions
+    from fluvio_duck_spark.streaming.consume_stream import (
+        fluvio_consume_stream,
+        run_stream_to_table,
+    )
+
+    assume(not crossing(pos, n, end))
+    register_fluvio_source(spark)
+    register_sql_table_functions(spark)
+    sf, t = tiny_topic["sf"], tiny_topic
+    args = " ".join(
+        (["-A"] if pin is None else ["-p", str(pin)])
+        + position_argv(pos, n, end, rows)
+    )
+    opts = f"{topic} {args}"
+    budget = 1000 if rows is None else rows  # parser default
+
+    def keys(df) -> list[int]:
+        return sorted(json.loads(r.value)["k"] for r in df.select("value").collect())
+
+    def ds(**options):
+        reader = spark.read.format("fluvio").option("args", args)
+        for k, v in options.items():
+            reader = reader.option(k, v)
+        return reader.load()
+
+    # global offsets: an event's offset is its event_id
+    sel = [
+        i for i, ty in enumerate(t["types"])
+        if (topic == "events" or ty == topic)
+        and (pin is None or ((5 * i) % 11) % 4 == pin)
+    ]
+    want = offset_model(sel, pos, n, end, budget)
+    got = {
+        "builder": keys(fluvio_consume(spark, opts, sf)),
+        "datasource sf_dir": keys(ds(sf_dir=sf, topic=topic)),
+        "udtf": keys(spark.sql(
+            f"SELECT value FROM fluvio_consume('{opts}', '{sf}')"
+        )),
+    }
+    for name, ks in got.items():
+        assert ks == want, (name, opts)
+    if pos in ("-B", "-H", "--start"):
+        stream = run_stream_to_table(
+            fluvio_consume_stream(spark, opts, sf_dir=sf), spark
+        )
+        assert keys(stream) == offset_model(sel, pos, n, end, None), opts
+    if topic != "events":
+        return  # a per-partition log directory is one topic
+
+    # per-partition offsets: each partition's rank by event_id
+    want_pp = sorted(
+        t["pp_ids"][p][o]
+        for p in range(4) if pin is None or p == pin
+        for o in offset_model(range(len(t["pp_ids"][p])), pos, n, end, budget)
+    )
+    got_pp = {
+        "builder per_partition_offsets": keys(fluvio_consume(
+            spark, opts, source=per_partition_log(spark, sf),
+            per_partition_offsets=True,
+        )),
+        "datasource log_dir": keys(ds(log_dir=t["log"])),
+        "datasource server": keys(ds(server=t["server"])),
+    }
+    for name, ks in got_pp.items():
+        assert ks == want_pp, (name, opts)
